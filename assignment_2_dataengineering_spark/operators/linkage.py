@@ -90,7 +90,8 @@ def fellegi_sunter_pairs(
     truncated-lineage pass-count fix, and truncated lineage also means
     a lost executor mid-query fails the job rather than recomputing
     (the localCheckpoint durability trade documented across this
-    codebase; per-site persist(DISK_ONLY) A/B in OPTIMIZATION_r11.md)."""
+    codebase; per-site persist(DISK_ONLY) A/B in operators/materialize.py's
+    docstring, commit f069018)."""
     if max_est_pairs is not None:
         est = (
             df.groupBy(block_col)

@@ -10,7 +10,7 @@ re-executing the subtree per branch measured strictly worse (guide
 §2.4/§3.3; per-site numbers in OPTIMIZATION_r10.md).
 
 Two forms, measured per site at sf0.1 AND sf10 (round-11 durability
-A/B, full table in OPTIMIZATION_r11.md):
+A/B, commit f069018; the figures below are its record):
 
 - `localCheckpoint()`: truncates lineage into NON-REPLICATED
   executor-local blocks; downstream consumers read row-based

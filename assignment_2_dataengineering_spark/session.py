@@ -41,7 +41,10 @@ def get_spark(
     # measured 8-59x blowups (spill) on every big-shuffle join/window
     # once partitions hit ~19M rows. Production sets this high and
     # lets AQE coalesce shrink it per stage — over-provisioning is
-    # cheap, under-provisioning is a spill.
+    # cheap, under-provisioning is a spill. It governs batch shuffles
+    # only: AQE does not coalesce micro-batch shuffles, so the
+    # dashboard plane (streaming/pipeline.py) starts its queries with
+    # one state partition per core instead.
     env_sp = os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS")
     if shuffle_partitions is None and env_sp:
         shuffle_partitions = int(env_sp)

@@ -8,12 +8,18 @@
 
 Execution note: these are four INDEPENDENT streaming queries over the
 same source plan — each reads the source and keeps its own state
-(simple, per-sink restartable, the shape memory sinks need). At the
-100 TB/day design point, collapse to ONE query whose foreachBatch
-fans the parsed batch into the four writes (the
-snapshot.merge_snapshot_batch pattern): one source read and one dedup
-state instead of four/two. The per-stage operators are identical
-either way.
+(simple, the shape memory sinks need; per-sink restartable once they
+are swapped for tables, as memory sinks outside complete mode refuse
+to recover from a checkpoint). At the 100 TB/day design point,
+collapse to ONE query whose foreachBatch fans the parsed batch into
+the four writes (the snapshot.merge_snapshot_batch pattern): one
+source read and one dedup state instead of four/two. The per-stage
+operators are identical either way.
+
+State width: every query starts with one shuffle (= state) partition
+per core, not the session's batch width. AQE skips micro-batches, so
+each stateful operator would otherwise commit that many state stores
+every trigger. A checkpoint keeps the width it was first written with.
 
 A user of the reference's dashboard.py switches by pointing this at
 their broker source and reading the sink tables; every stage is the
@@ -24,9 +30,9 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.streaming import StreamingQuery
+from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 
 from . import ingest, snapshot, windows
 
@@ -86,26 +92,24 @@ def run_dashboard_pipeline(
     fac_snap = snapshot.streaming_latest_snapshot(
         fac.select("facility_id", "ts", "power_mw", "co2_tonnes"), "facility_id"
     )
-    q1 = (
+    w1 = (
         fac_snap.writeStream.outputMode("update")
         .format("memory")
         .queryName(f"{sink_prefix}_facility_snapshot")
         .option("checkpointLocation", f"{checkpoint_root}/fac_snap")
         .trigger(**trigger)
-        .start()
     )
 
     mkt = ingest.market_branch(parsed)
     mkt_snap = snapshot.streaming_latest_snapshot(
         mkt.select("region_id", "ts", "price_dmwh", "demand_mw"), "region_id"
     )
-    q2 = (
+    w2 = (
         mkt_snap.writeStream.outputMode("update")
         .format("memory")
         .queryName(f"{sink_prefix}_market_snapshot")
         .option("checkpointLocation", f"{checkpoint_root}/mkt_snap")
         .trigger(**trigger)
-        .start()
     )
 
     # Same enriched + deduped stream as the snapshot branch: under QoS-1
@@ -120,23 +124,34 @@ def run_dashboard_pipeline(
     # than the watermark would emit NOTHING. Update re-emits a bucket
     # whenever it changes; readers resolve latest-per-(bucket, key)
     # exactly as they do for the snapshot sinks.
-    q3 = (
+    w3 = (
         win.writeStream.outputMode("update")
         .format("memory")
         .queryName(f"{sink_prefix}_facility_windows")
         .option("checkpointLocation", f"{checkpoint_root}/fac_win")
         .trigger(**trigger)
-        .start()
     )
 
     quar = ingest.quarantine_branch(parsed)
-    q4 = (
+    w4 = (
         quar.writeStream.outputMode("append")
         .format("memory")
         .queryName(f"{sink_prefix}_quarantine")
         .option("checkpointLocation", f"{checkpoint_root}/quar")
         .trigger(**trigger)
-        .start()
     )
 
-    return DashboardPipeline(q1, q2, q3, q4)
+    return DashboardPipeline(*_start_all(raw_stream.sparkSession, (w1, w2, w3, w4)))
+
+
+def _start_all(spark: SparkSession, writers: tuple[DataStreamWriter, ...]) -> list[StreamingQuery]:
+    """Start each writer with one state partition per core. start()
+    clones the session conf, so batch work keeps its width, except batch
+    work that other threads start on this session during these starts."""
+    key = "spark.sql.shuffle.partitions"
+    batch_width = spark.conf.get(key)
+    spark.conf.set(key, str(spark.sparkContext.defaultParallelism))
+    try:
+        return [w.start() for w in writers]
+    finally:
+        spark.conf.set(key, batch_width)

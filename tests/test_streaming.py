@@ -25,6 +25,16 @@ def parsed_batch(spark, event_lines):
     return ingest.parse_events(raw)
 
 
+@pytest.fixture(scope="module")
+def facility_lookup(spark):
+    from assignment_2_dataengineering_spark.plans import nem_etl
+    from assignment_2_dataengineering_spark.schemas import FUELTECH_SCHEMA
+
+    facs = nem_etl.load_facilities_json(spark, nem.facilities_raw())
+    fuel = spark.createDataFrame(nem.fueltech_map(), FUELTECH_SCHEMA)
+    return nem_etl.flatten_facilities(facs, fuel)
+
+
 def test_routing_and_validation(parsed_batch, event_lines):
     fac = ingest.facility_branch(parsed_batch)
     mkt = ingest.market_branch(parsed_batch)
@@ -255,6 +265,180 @@ def test_dashboard_pipeline_end_to_end(spark, tmp_path_factory, event_lines):
     redelivered = {kt for kt, (_, _, n) in allowed.items() if n >= 3}
     assert redelivered
     assert redelivered & {(r.facility_id, r.bucket) for r in emitted}
+
+
+SINKS = ("facility_snapshot", "market_snapshot", "facility_windows", "quarantine")
+
+
+def _state_widths(q) -> list[int]:
+    """numShufflePartitions of every stateful operator in the query's
+    triggers that read data."""
+    return [
+        op["numShufflePartitions"]
+        for prog in q.recentProgress
+        if prog["numInputRows"] > 0
+        for op in prog["stateOperators"]
+    ]
+
+
+def test_dashboard_pipeline_state_partitions_one_per_core(
+    spark, tmp_path_factory, event_lines, facility_lookup
+):
+    """The plane's stateful operators keep one state partition per core,
+    not the session's batch shuffle width, and the session reads its
+    batch width again once the pipeline has started, and also after a
+    start that raised."""
+    from pyspark.errors import IllegalArgumentException
+
+    from assignment_2_dataengineering_spark.streaming import pipeline
+
+    key = "spark.sql.shuffle.partitions"
+    session_width = spark.conf.get(key)
+    src = str(tmp_path_factory.mktemp("replay_width"))
+    ckpt = str(tmp_path_factory.mktemp("ckpt_width"))
+    replay.write_replay_chunks(event_lines, src, events_per_file=200)
+    spark.conf.set(key, "32")
+    p = None
+    try:
+        p = pipeline.run_dashboard_pipeline(
+            replay.file_replay_stream(spark, src, 100),
+            facility_lookup,
+            f"{ckpt}/first",
+            sink_prefix="t_width",
+            available_now=False,
+        )
+        assert spark.conf.get(key) == "32"
+        # the first sink's name is taken while `p` runs
+        with pytest.raises(IllegalArgumentException, match="t_width_facility_snapshot"):
+            pipeline.run_dashboard_pipeline(
+                replay.file_replay_stream(spark, src),
+                facility_lookup,
+                f"{ckpt}/second",
+                sink_prefix="t_width",
+                available_now=False,
+            )
+        assert spark.conf.get(key) == "32"
+        ops = {}
+        for name in SINKS:
+            q = getattr(p, name)
+            q.processAllAvailable()
+            ops[name] = _state_widths(q)
+    finally:
+        if p is not None:
+            p.stop_all()
+        spark.conf.set(key, session_width)
+    per_core = spark.sparkContext.defaultParallelism
+    assert per_core != 32
+    # dedup + snapshot, snapshot, dedup + window, no state
+    assert {n: len(w) for n, w in ops.items()} == {
+        "facility_snapshot": 2,
+        "market_snapshot": 1,
+        "facility_windows": 2,
+        "quarantine": 0,
+    }
+    assert {w for ws in ops.values() for w in ws} == {per_core}
+
+
+def test_dashboard_pipeline_restart_keeps_checkpoint_state_width(
+    spark, tmp_path_factory, event_lines, facility_lookup, monkeypatch
+):
+    """A checkpoint written at the session's 32 state partitions (how the
+    plane started its queries before it pinned one per core) resumes
+    under the current code at 32 (Spark restores the width from the
+    offset log) with its state intact: the sinks of both runs, resolved
+    per key, equal the batch forms over every event. Half the events
+    land before the stop, the rest while the plane is down; the second
+    half re-delivers (facility, ts) pairs of the first (the +11:00
+    readings), which only the restored dedup state can drop.
+
+    Memory sinks refuse to recover from a checkpoint outside complete
+    mode, so each query appends its micro-batches to a parquet table
+    instead, as a deployment swaps the memory sink for a table."""
+    import os
+
+    from pyspark.testing import assertDataFrameEqual
+
+    from assignment_2_dataengineering_spark.operators.relational import latest_per_key
+    from assignment_2_dataengineering_spark.streaming import pipeline
+
+    staged = str(tmp_path_factory.mktemp("replay_restart_staged"))
+    src = str(tmp_path_factory.mktemp("replay_restart_width"))
+    ckpt = str(tmp_path_factory.mktemp("ckpt_restart_width"))
+    out = str(tmp_path_factory.mktemp("sinks_restart_width"))
+    # two chunks, one trigger each: a (key, ts) pair's first line
+    # arrives first, as in the batch forms below
+    replay.write_replay_chunks(event_lines, staged, events_per_file=(len(event_lines) + 1) // 2)
+    first, rest = sorted(os.listdir(staged))
+
+    def land(name):  # rename keeps the chunk's replay mtime
+        os.rename(os.path.join(staged, name), os.path.join(src, name))
+
+    def to_tables(writers):
+        def append_to(name):
+            return lambda batch, _: batch.write.mode("append").parquet(os.path.join(out, name))
+
+        return [w.foreachBatch(append_to(n)) for n, w in zip(SINKS, writers)]
+
+    def run():
+        p = pipeline.run_dashboard_pipeline(
+            replay.file_replay_stream(spark, src), facility_lookup, ckpt, sink_prefix="t_restart"
+        )
+        p.await_all(180)
+        return p
+
+    start_all = pipeline._start_all
+    key = "spark.sql.shuffle.partitions"
+    session_width = spark.conf.get(key)
+    spark.conf.set(key, "32")
+    try:
+        land(first)
+        with monkeypatch.context() as m:  # start as before the pin: the session's width
+            m.setattr(pipeline, "_start_all", lambda _, writers: [w.start() for w in to_tables(writers)])
+            old = run()
+        land(rest)
+        monkeypatch.setattr(pipeline, "_start_all", lambda s, writers: start_all(s, to_tables(writers)))
+        new = run()
+    finally:
+        spark.conf.set(key, session_width)
+
+    for name in SINKS[:3]:
+        assert set(_state_widths(getattr(old, name))) == {32}
+        assert set(_state_widths(getattr(new, name))) == {32}, name
+
+    def sink(name):
+        return spark.read.parquet(os.path.join(out, name))
+
+    # the batch forms over one file: dedup keeps a (key, ts) pair's first line
+    path = os.path.join(str(tmp_path_factory.mktemp("restart_batch")), "all.jsonl")
+    with open(path, "w") as f:
+        f.write("\n".join(event_lines) + "\n")
+    parsed = ingest.parse_events(spark.read.text(path))
+    fac = windows.dedup_events(
+        ingest.enrich_facility_events(ingest.facility_branch(parsed), facility_lookup), ["facility_id"]
+    )
+    fac_cols = ["facility_id", "last_ts", "power_mw", "co2_tonnes"]
+    assertDataFrameEqual(
+        latest_per_key(sink("facility_snapshot"), ["facility_id"], "last_ts").select(fac_cols),
+        snapshot.latest_snapshot_batch(fac.select("facility_id", "ts", "power_mw", "co2_tonnes"), "facility_id")
+        .select(fac_cols),
+    )
+    mkt_cols = ["region_id", "last_ts", "price_dmwh", "demand_mw"]
+    assertDataFrameEqual(
+        latest_per_key(sink("market_snapshot"), ["region_id"], "last_ts").select(mkt_cols),
+        snapshot.latest_snapshot_batch(
+            ingest.market_branch(parsed).select("region_id", "ts", "price_dmwh", "demand_mw"), "region_id"
+        ).select(mkt_cols),
+    )
+    # every (bucket, facility) holds one deduped reading, so each window
+    # is emitted once over both runs
+    win_cols = ["bucket", "facility_id", "sum_power_mw", "sum_co2_tonnes"]
+    assertDataFrameEqual(
+        sink("facility_windows").select(win_cols),
+        windows.tumbling_window_sums(fac, "facility_id", ["power_mw", "co2_tonnes"], watermark=None).select(
+            win_cols
+        ),
+    )
+    assertDataFrameEqual(sink("quarantine"), ingest.quarantine_branch(parsed))
 
 
 def test_rate_paced_replay_emits_in_index_order(spark, event_lines):
