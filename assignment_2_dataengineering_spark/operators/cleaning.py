@@ -54,8 +54,9 @@ def boilerplate_scores(
     **xxhash64(gram) — 8 bytes** — instead of the raw ~25-char gram
     string, and the broadcast common set becomes a long array probed
     by array_intersect over the doc's hashed gram array. The profile
-    (scripts/profile_boilerplate.py, sf100 = 25M-doc corpus): scan
-    1.05 s, shingle-only 11.9 s, string-key dfreq 65.6 s, full 70.8 s
+    (`git show 375d17f:scripts/profile_boilerplate.py`, sf100 =
+    25M-doc corpus): scan 1.05 s, shingle-only 11.9 s, string-key
+    dfreq 65.6 s, full 70.8 s
     — the string-key aggregate was ~80% of the query, and its 107 s
     cold-JIT first run is what the r7 ledger's 106-138 s protocol
     spread was measuring. This is span_dedup's occurrence-shuffle
@@ -79,7 +80,8 @@ def boilerplate_scores(
     which is exactly the "persist the gram arrays between the two
     passes" production note the round-8 docstring carried — now the
     shipped shape rather than advice (sf0.1: 3.08 → 1.41 s; the before/
-    after plans in plans/r10/ show the documents scan count drop 6 → 3
+    after plans, `git show 142017c:plans/r10/q_boilerplate_before.txt`
+    and `_after.txt`, show the documents scan count drop 6 → 3
     and the second shingle pipeline replaced by a checkpoint scan).
     The gram STRINGS never materialize — only their 8-byte keys do, so
     the checkpoint holds ~1/3 the bytes of the raw text it replaces.

@@ -22,29 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-# Scale-aware checkpoint-cadence selection (round-8 judge item #2: the
-# sf100-optimal cadence must not hide behind an env dial). Measured
-# crossover (SCALE.md §6k): k=1 wins at sf10 (13.6 s vs k=2's
-# 14.0-15.1 — recompute costs more than the small per-round checkpoint)
-# and k=2 wins at sf100 (45-54 s vs k=1's 61-65 — writing and GC-ing
-# the full rank table's blocks every round overtakes one share-join
-# recompute). The selector reads the DISTINCT EDGE COUNT — already
-# materialized for free, because `e` is persisted and the count is the
-# first action that warms that cache (work iteration 1 was about to do
-# anyway) — and flips to k=2 at the geometric mean of the measured
-# decades. Measured calibration (round 9, scripts/r9_measure.py phase
-# 0): the interaction graph holds 246,386 distinct edges at sf10 (k=1
-# wins) and 1,596,386 at sf100 (k=2 wins) → threshold 6.3e5, ~2.6x
-# from both points (the edge count grows sub-linearly in events — the
-# user-pair domain saturates — so the decades sit closer together
-# than the row counts do).
-PR_CADENCE_AUTO_MIN_EDGES = 630_000
-
-
-def select_checkpoint_cadence(n_edges: int) -> int:
-    """Pure policy: k=1 below PR_CADENCE_AUTO_MIN_EDGES, k=2 at or
-    above (thresholds + the numbers that set them in SCALE.md §6l)."""
-    return 2 if n_edges >= PR_CADENCE_AUTO_MIN_EDGES else 1
+from .scale_policy import choose
 
 
 def pagerank(
@@ -111,7 +89,7 @@ def pagerank(
         # auto cadence: one count over the persisted edge table — the
         # action that would otherwise happen in superstep 1 warms the
         # same cache, so the statistic is effectively free
-        checkpoint_every = select_checkpoint_cadence(e.count())
+        checkpoint_every = choose("pagerank_cadence", e.count())
     nodes = (
         e.select(F.col("src").alias("node"))
         .union(e.select(F.col("dst").alias("node")))
@@ -156,8 +134,8 @@ def pagerank(
             # k=1's 61-65 — writing and GC-ing the full rank table's
             # blocks per round overtakes one share-join recompute).
             # The default (checkpoint_every=None) now picks the
-            # measured winner from the distinct edge count — see
-            # select_checkpoint_cadence above; an explicit int is the
+            # measured winner from the distinct edge count — the
+            # "pagerank_cadence" scale rule; an explicit int is the
             # override (SPARK_GRAFT_PR_CHECKPOINT_EVERY in q_pagerank).
             if _i % checkpoint_every == 0:
                 ranks = ranks.localCheckpoint()

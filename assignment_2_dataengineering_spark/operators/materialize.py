@@ -26,16 +26,10 @@ A/B, commit f069018; the figures below are its record):
   2.62 s, psi 3.78 → 1.44 s), i.e. the fault-tolerant form is ALSO the
   faster one at scale.
 
-The default is therefore a SCALE-AWARE selector (the span/graph/psi
-mechanism): the Catalyst optimizer's sizeInBytes estimate for the
-materialized subtree — input-scan-scaled under basic stats propagation,
-read without running a job — picks local_checkpoint below
-MAT_DISK_PERSIST_MIN_BYTES and disk_persist at or above. Measured
-calibration (round 11, scripts/r11_measure.py durability +
-/tmp stat probe, all 8 sites): every sf0.1 site estimate fell in
-1.7e5-1.5e6 (local_checkpoint wins) and every sf10 site estimate in
-2.9e7-1.4e8 (disk_persist wins) → threshold 6.5e6, the geometric mean
-of the two closest points (~4.4x from both).
+The default is therefore scale-aware: the "materialize" rule in
+operators/scale_policy.py picks local_checkpoint below a plan-bytes
+threshold of the materialized subtree and disk_persist at or above
+(read without running a job; calibration next to the rule).
 
 `prefer` is the per-site measured exception (only
 corpus-pipeline-v2's capped stage uses it: its materialized table
@@ -52,46 +46,22 @@ consumer computes (pinned by tests/test_materialize.py).
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
 from pyspark.storagelevel import StorageLevel
 
-_MODES = ("auto", "local_checkpoint", "disk_persist")
-
-MAT_DISK_PERSIST_MIN_BYTES = 6_500_000
-
-
-def _plan_stat_bytes(df: DataFrame) -> int:
-    """The Catalyst optimizer's sizeInBytes estimate for a plan —
-    file-size-based for file relations (and input-scaled through unary
-    nodes under basic stats), so reading it costs no job. Same private
-    `_jdf` seam as the span/graph selectors (operators/dedup.py)."""
-    return int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-
-
-def select_materialize_mode(est_bytes: int) -> str:
-    """Pure policy: local_checkpoint below MAT_DISK_PERSIST_MIN_BYTES,
-    disk_persist at or above (calibration in the module docstring)."""
-    return (
-        "disk_persist"
-        if est_bytes >= MAT_DISK_PERSIST_MIN_BYTES
-        else "local_checkpoint"
-    )
+from .scale_policy import choose, override, plan_bytes
 
 
 def materialize(df: DataFrame, prefer: str | None = None) -> DataFrame:
-    """Eagerly materialize a fan-out subtree under the scale-aware
-    policy selected by SPARK_GRAFT_MATERIALIZE / `prefer` / the
-    sizeInBytes selector (module docstring). Returns a DataFrame whose
-    downstream consumers no longer re-plan or re-execute the subtree."""
-    mode = os.environ.get("SPARK_GRAFT_MATERIALIZE", "auto")
-    if mode not in _MODES:
-        raise ValueError(
-            f"SPARK_GRAFT_MATERIALIZE must be one of {_MODES}; got {mode!r}"
-        )
-    if mode == "auto":
-        mode = prefer or select_materialize_mode(_plan_stat_bytes(df))
+    """Eagerly materialize a fan-out subtree under the form picked by
+    SPARK_GRAFT_MATERIALIZE, else `prefer`, else the "materialize"
+    scale rule (module docstring). Returns a DataFrame whose downstream
+    consumers no longer re-plan or re-execute the subtree."""
+    mode = (
+        override("materialize")
+        or prefer
+        or choose("materialize", plan_bytes(df))
+    )
     if mode == "disk_persist":
         df = df.persist(StorageLevel.DISK_ONLY)
         df.count()  # eager: mirror localCheckpoint's materialize-now semantics

@@ -12,6 +12,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..operators.materialize import materialize
+from ..operators.scale_policy import choose, plan_bytes
 from ..sources.tables import load_table
 from .registry import register
 
@@ -1421,28 +1422,6 @@ def q_zipf(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Tier gate for q_psi_drift's intermediate materialization (round-11,
-# r10 judge item #5). The r10 A/B measured the checkpointed form −17%
-# at sf10 but +36% at sf0.1: the three small materialization jobs cost
-# more than the re-planned passes they save when the fact table is
-# overhead-scale. The dial is the optimizer's sizeInBytes estimate of
-# the 3-column events projection (no job — the span/graph selector
-# mechanism). Measured plan-stat bytes (round-11 calibration,
-# scripts/r11_measure.py psi): 1,125,169 at sf0.1 (lazy wins, 2.15 vs
-# 2.63 s) vs 108,053,139 at sf10 (materialized form, now disk_persist
-# via the scale-aware materialize chokepoint, measured −62% in one
-# sweep and a tie in a later one — kept for the r10-measured sf10 win
-# with today's worst case a tie) → threshold 1.1e7, the geometric
-# mean, ~10x from both measured points.
-PSI_MATERIALIZE_MIN_BYTES = 11_000_000
-
-
-def select_psi_materialization(est_bytes: int) -> bool:
-    """Pure policy: lazy below PSI_MATERIALIZE_MIN_BYTES, materialized
-    at or above (calibration in the constant's comment)."""
-    return est_bytes >= PSI_MATERIALIZE_MIN_BYTES
-
-
 @register(
     "q_psi_drift",
     oracle="""
@@ -1507,16 +1486,14 @@ def q_psi_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     materialization jobs cost more than the re-planned passes they
     save). The materialization is now gated on the optimizer's
     sizeInBytes estimate of the 3-column events projection (the
-    span-selector mechanism — file-size-based, no job): lazy below
-    PSI_MATERIALIZE_MIN_BYTES, materialized at or above. Gate changes
-    the plan only — both forms compute identical integer counts and
+    "psi_materialize" rule in operators/scale_policy.py — file-size-
+    based, no job): lazy below 11 MB, materialized at or above. Gate
+    changes the plan only — both forms compute identical integer counts and
     identical doubles (the r10 exact-match A/B covered both shapes)."""
     ev = load_table(spark, sf_dir, "events").select("event_id", "event_type", "value")
-    from ..operators.dedup import _plan_stat_bytes
-
     mat = (
         materialize
-        if select_psi_materialization(_plan_stat_bytes(ev))
+        if choose("psi_materialize", plan_bytes(ev))
         else (lambda df: df)
     )
     ref = ev.filter(F.col("event_id") % 2 == 0)

@@ -244,7 +244,8 @@ def q_tfidf(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate (repartition("doc_id") — a grouping-key prefix satisfies
     the aggregate's clustered distribution AND the final ranking
     window, deleting the window's Exchange + re-sort; plan diff
-    preserved in plans/r11/q_tfidf_{before,after}.txt). Measured,
+    preserved in `git show f069018:plans/r11/q_tfidf_before.txt` and
+    its `_after.txt` sibling). Measured,
     fresh-JVM min(first, post-GC repeat) alternating old/new, 6 reps
     each at sf10/256 partitions: old 5.63-9.06 s (median 7.14), new
     4.88-17.61 s (median 7.49 with a BIMODAL worse tail — two reps at
@@ -911,19 +912,17 @@ def q_span_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     First-occurrence strategy is SCALE-AWARE by default (round-9):
     "auto" picks the measured sf-tier winner from the optimizer's size
-    estimate of the document scan (operators/dedup.select_span_strategy
-    — window below SPAN_AUTO_JOIN_MIN_BYTES = 120 MB of plan-stat
+    estimate of the document scan (the "span_first_occurrence" rule
+    in operators/scale_policy.py — window below 120 MB of plan-stat
     bytes, the sort-free join form at or above; crossover in SCALE.md
-    §6k/§6l). SPARK_GRAFT_SPAN_FIRST_OCC
-    overrides with an explicit "window"/"join"; span_dedup rejects
-    anything else loudly (round-8 ADVICE) instead of silently falling
-    through to the window plan."""
-    import os
-
+    §6k/§6l). SPARK_GRAFT_SPAN_FIRST_OCC overrides with an explicit
+    "window"/"join"; anything else fails loudly (round-8 ADVICE)
+    instead of silently falling through to the window plan."""
     from ..operators.dedup import span_dedup
+    from ..operators.scale_policy import override
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    strategy = os.environ.get("SPARK_GRAFT_SPAN_FIRST_OCC", "auto")
+    strategy = override("span_first_occurrence") or "auto"
     return span_dedup(docs, n=10, first_occurrence=strategy)
 
 
@@ -1087,7 +1086,8 @@ def q_corpus_pipeline_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the hot/cold routing probes, and the cover-removal join, and the
     # gate join below re-reads it — left lazy, the cap stage's
     # row_number window re-planned ~6x (38 Window nodes in
-    # plans/r10/q_corpus_pipeline_v2_before.txt). One small
+    # `git show 142017c:plans/r10/q_corpus_pipeline_v2_before.txt`).
+    # One small
     # materialization (k·|sources| rows) feeds all consumers
     # (2.15 -> 1.91 s at sf0.1, interleaved A/B). localCheckpoint
     # preserves the optimizer's sizeInBytes estimate, so span_dedup's

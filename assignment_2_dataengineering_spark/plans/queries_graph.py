@@ -16,38 +16,9 @@ from pyspark.sql import functions as F
 
 from ..operators.graph import pagerank, pagerank_oracle_sql
 from ..operators.materialize import materialize
+from ..operators.scale_policy import choose, override, plan_bytes
 from ..sources.tables import load_table
 from .registry import register
-
-# Scale-aware bucket-granularity selection for the two-phase global
-# lead (round-10, the last hand-set strategy knob — r9 judge item #8).
-# Measured calibration (round 10, scripts/r10_measure.py phase 0, both
-# tiers two-run fresh-JVM):
-#   sf10  (1e7 events, 12.8e7 plan-stat bytes):  minute 18.8 s,
-#         hour 4.9 s, day 4.3 s  (day's edge over hour is 0.6 s)
-#   sf100 (1e8 events, 1.27e9 plan-stat bytes):  minute 41.1 s,
-#         hour 36.6 s, day 45.7 s (and a 278 s cold-JVM spill outlier)
-# "hour" is the measured winner at sf100 and within 12% of day at sf10,
-# while day's failure mode is catastrophic (667k avg rows/bucket at
-# sf100 → single-task sort spill) — so hour stays the default at every
-# measured tier and the selector's only flip is hour→minute for event
-# rates beyond measurement: hour's avg rows/bucket (27.8k at sf100,
-# linear in events for this 720 h / 5-type corpus shape) crosses the
-# ~211k geometric mean of the measured good (66.7k, day@sf10) and bad
-# (667k, day@sf100) per-bucket loads at ~7.6× sf100, i.e. ~9.6e9
-# plan-stat bytes of the 4-column events projection. The estimate is
-# the optimizer's own sizeInBytes (file-size-based — no job, no
-# collect, cluster-safe; the span-dedup selector's mechanism,
-# operators/dedup.py). SPARK_GRAFT_GRAPH_BUCKET stays as the explicit
-# override.
-GRAPH_BUCKET_AUTO_MINUTE_MIN_BYTES = 9_600_000_000
-
-
-def select_graph_bucket(est_bytes: int) -> str:
-    """Pure policy: "hour" below GRAPH_BUCKET_AUTO_MINUTE_MIN_BYTES,
-    "minute" at or above (calibration in SCALE.md §6m)."""
-    return "minute" if est_bytes >= GRAPH_BUCKET_AUTO_MINUTE_MIN_BYTES else "hour"
-
 
 # Interaction graph: within each event_type's global timeline, an edge
 # connects the acting user to the next acting user (distinct pairs,
@@ -84,16 +55,20 @@ def _user_edges(
 
     `bucket` is the granularity dial for event rate, SCALE-AWARE by
     default (round-10): when neither the argument nor
-    SPARK_GRAFT_GRAPH_BUCKET is set, select_graph_bucket reads the
-    optimizer's sizeInBytes estimate of the 4-column events projection
-    (no job) and picks "hour" below GRAPH_BUCKET_AUTO_MINUTE_MIN_BYTES
-    = 9_600_000_000 plan-stat bytes (~9_600 MB, ≈7.6e8 events — the
-    measured winner at sf10 AND sf100, calibration in the module-level
-    comment and SCALE.md §6m) and "minute" above, where per-hour-bucket
-    sorts would cross the ~211k-row load at which the coarse-bucket
-    sort degraded measurably. Granularity changes the plan only — the
-    stitched result is value-identical at any grain (next paragraph) —
-    so the selector can never change a query's answer.
+    SPARK_GRAFT_GRAPH_BUCKET is set, the "graph_bucket" rule
+    (operators/scale_policy.py) reads the optimizer's sizeInBytes
+    estimate of the 4-column events projection (no job) and picks
+    "hour" below 9_600_000_000 plan-stat bytes (~9_600 MB, ≈7.6e8
+    events — the measured winner at sf10 AND sf100, calibration next to
+    the rule and in SCALE.md §6m) and "minute" above, where per-hour-
+    bucket sorts would cross the ~211k-row load at which the
+    coarse-bucket sort degraded measurably. The env var accepts only
+    the measured grains (minute, hour, day): date_trunc maps any other
+    unit to NULL, which would put each event type in one bucket and
+    silently run the 5-partition global sort this function exists to
+    avoid. Granularity changes the plan only — the stitched result is
+    value-identical at any grain (next paragraph) — so the selector can
+    never change a query's answer.
 
     Boundary rows are flagged EXPLICITLY (lead(1) is null only on the
     true last row of a bucket) rather than via coalesce(__nxt,
@@ -101,16 +76,13 @@ def _user_edges(
     row has NULL user_id" — on a corpus with null user_id the naive
     global lead yields a null dst (edge dropped) where coalesce would
     substitute the next bucket's first user (spurious edge)."""
-    import os
-
     if bucket is None:
-        bucket = os.environ.get("SPARK_GRAFT_GRAPH_BUCKET")  # explicit override
+        bucket = override("graph_bucket")
     ev = load_table(spark, sf_dir, "events").select(
         "event_type", "ts", "event_id", "user_id"
     )
     if bucket is None:
-        est = int(ev._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-        bucket = select_graph_bucket(est)
+        bucket = choose("graph_bucket", plan_bytes(ev))
     bucketed = ev.withColumn("__b", F.date_trunc(bucket, F.col("ts")))
     w_b = Window.partitionBy("event_type", "__b").orderBy("ts", "event_id")
     led = bucketed.withColumn("__nxt", F.lead("user_id").over(w_b)).withColumn(
@@ -155,31 +127,15 @@ def q_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Checkpoint cadence is SCALE-AWARE by default (round-9): the
     operator picks the measured sf-tier winner from the distinct edge
-    count (operators/graph.select_checkpoint_cadence — k=1 below
-    PR_CADENCE_AUTO_MIN_EDGES = 630_000 edges, k=2 at or above, so
-    sf10's 1.7e5-edge graph gets k=1 and sf100's 1.6e6 gets k=2;
-    crossover in SCALE.md §6l).
+    count (the "pagerank_cadence" rule in operators/scale_policy.py —
+    k=1 below 630_000 edges, k=2 at or above, so sf10's 2.5e5-edge
+    graph gets k=1 and sf100's 1.6e6 gets k=2; crossover in SCALE.md
+    §6l).
     SPARK_GRAFT_PR_CHECKPOINT_EVERY overrides with an explicit positive
     integer cadence ("auto" or unset = the selector); anything else
     fails loudly here rather than silently running the wrong plan
     (round-8 ADVICE)."""
-    import os
-
-    raw = os.environ.get("SPARK_GRAFT_PR_CHECKPOINT_EVERY", "auto")
-    if raw == "auto":
-        k = None
-    else:
-        try:
-            k = int(raw)
-        except ValueError:
-            raise ValueError(
-                f"SPARK_GRAFT_PR_CHECKPOINT_EVERY must be 'auto' or a "
-                f"positive integer; got {raw!r}"
-            ) from None
-        if k < 1:
-            raise ValueError(
-                f"SPARK_GRAFT_PR_CHECKPOINT_EVERY must be >= 1; got {k}"
-            )
+    k = override("pagerank_cadence")
     return pagerank(_user_edges(spark, sf_dir), iterations=5, checkpoint_every=k)
 
 
@@ -302,7 +258,8 @@ def q_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     degree aggregate and the orientation join, and `o` feeds all three
     self-join branches — left inlined, the whole _user_edges derivation
     (events scan + two window passes + distinct) was planned ~34 times
-    (206 Exchange / 68 scan nodes in the before plan, plans/r10/), and
+    (206 Exchange / 68 scan nodes in the before plan, `git show
+    142017c:plans/r10/q_triangle_count_before.txt`), and
     exchange reuse cannot fire across the alias-renamed branches. Two
     |E|-row materializations replace that: the after plan's triangle
     join reads two checkpointed RDD scans (3.55 → 2.26 s at sf0.1;

@@ -87,6 +87,12 @@ SCALE_SUBSET = [
     "q_pagerank", "q_triangle_count",
 ]
 
+# The sf100 spot subset: the five most expensive document-tier queries.
+SF100_SUBSET = [
+    "q_lm_score", "q_span_dedup", "q_tfidf", "q_dedup_minhash_lsh",
+    "q_decontaminate",
+]
+
 
 def _child(name: str, sf_dir: str, timed_runs: int, warm: str = "exec") -> None:
     """Child-process mode: fresh JVM; one untimed warm-up execution
@@ -228,88 +234,56 @@ def main() -> None:
     timings = _run_isolated(bench_names, sf_dir, TIMED_RUNS, child_timeout=420)
     total = round(sum(t for t in timings.values() if t > 0), 3)
 
-    # ---- scale tier: the 20-query subset at sf10, bench_sf100 discipline --
-    sf10_dir = os.environ.get(
-        "SPARK_GRAFT_SF10_DIR", os.path.join(REPO, ".benchdata", "sf10")
-    )
-    sf10_block = None
-    if os.path.isdir(sf10_dir) and os.environ.get("SPARK_GRAFT_SKIP_SF10") != "1":
-        sf10_timings = _run_isolated(
-            SCALE_SUBSET, sf10_dir, timed_runs=1, child_timeout=900,
-            extra_env={
-                # §6h discipline: production-style initial shuffle count
-                # (AQE coalesces down) and a heap the sf10 join tier
-                # doesn't spill in
-                "SPARK_GRAFT_SHUFFLE_PARTITIONS": os.environ.get(
-                    "SPARK_GRAFT_SHUFFLE_PARTITIONS", "256"),
-                "SPARK_DRIVER_MEMORY": os.environ.get(
-                    "SPARK_DRIVER_MEMORY", "48g"),
-            },
-            warm="scale",
-        )
-        sf10_block = {
-            "value": round(sum(t for t in sf10_timings.values() if t > 0), 2),
-            "unit": "sec",
-            "queries": sf10_timings,
-            "failed": sorted(n for n, t in sf10_timings.items() if t < 0),
-            "sf": 10,
-            "timed_runs_per_query": 1,
-            "shuffle_partitions": os.environ.get(
-                "SPARK_GRAFT_SHUFFLE_PARTITIONS", "256"),
-            "isolation": "fresh JVM per query",
-            "warm": "page cache primed; min(first run, post-GC repeat)",
-        }
-
-
-    # ---- sf100 spot block: top-5 document-tier queries -------------------
-    # (round-10 judge item #8: make work-dominated-tier regressions
-    # longitudinally visible in the binding artifact next to sf0.1/sf10;
-    # scripts/bench_sf100.py already has the discipline — this is its
-    # wiring.) Gated to BINDING runs: the block is ~5-10 minutes of
-    # minute-scale children, which would dominate the driver's own
-    # invocation for no scoreboard value (the driver benches sf0.1).
-    # Only the documents table exists at this tier (917 MB, 5M docs —
-    # .benchdata/sf100 generation note in scripts/gen_scale_data.py), so
-    # the subset is the five most expensive DOCUMENT-tier queries of the
-    # sf10 block. Fail-soft like the sf10 block.
-    SF100_SUBSET = [
-        "q_lm_score", "q_span_dedup", "q_tfidf", "q_dedup_minhash_lsh",
-        "q_decontaminate",
-    ]
-    sf100_dir = os.environ.get(
-        "SPARK_GRAFT_SF100_DIR", os.path.join(REPO, ".benchdata", "sf100")
-    )
-    sf100_block = None
-    if (
-        os.path.isdir(sf100_dir)
-        and os.environ.get("SPARK_GRAFT_BINDING") == "1"
-        and os.environ.get("SPARK_GRAFT_SKIP_SF100") != "1"
+    # ---- scale tiers: bench_sf100 discipline -----------------------------
+    # Fresh JVM per query, production-style initial shuffle count (AQE
+    # coalesces down, §6h) and a heap the tier doesn't spill in. Each
+    # tier is fail-soft: an absent dir or a failed query leaves the
+    # binding sf0.1 line intact. The sf100 spot block (round-10 judge
+    # item #8) makes work-dominated-tier regressions longitudinally
+    # visible next to sf0.1/sf10; it is gated to BINDING runs, because
+    # its ~5-10 minutes of minute-scale children would dominate an
+    # ordinary sf0.1 invocation for no scoreboard value. Only the documents table exists at sf100 (917 MB,
+    # 5M docs — generation note in scripts/gen_scale_data.py), so its
+    # subset is the five most expensive DOCUMENT-tier queries of sf10's.
+    scale_blocks = {}
+    for sf_n, subset, child_timeout, driver_memory, binding_only, note in (
+        (10, SCALE_SUBSET, 900, "48g", False, None),
+        (100, SF100_SUBSET, 1800, "96g", True,
+         "binding runs only; documents-tier subset"),
     ):
-        sf100_timings = _run_isolated(
-            SF100_SUBSET, sf100_dir, timed_runs=1, child_timeout=1800,
+        tier_dir = os.environ.get(
+            f"SPARK_GRAFT_SF{sf_n}_DIR", os.path.join(REPO, ".benchdata", f"sf{sf_n}")
+        )
+        scale_blocks[sf_n] = None
+        if (
+            not os.path.isdir(tier_dir)
+            or os.environ.get(f"SPARK_GRAFT_SKIP_SF{sf_n}") == "1"
+            or (binding_only and os.environ.get("SPARK_GRAFT_BINDING") != "1")
+        ):
+            continue
+        shuffle_partitions = os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", "256")
+        tier_timings = _run_isolated(
+            subset, tier_dir, timed_runs=1, child_timeout=child_timeout,
             extra_env={
-                # the bench_sf100.py discipline (SCALE.md §7): production
-                # shuffle sizing + a heap the text tier doesn't spill in
-                "SPARK_GRAFT_SHUFFLE_PARTITIONS": os.environ.get(
-                    "SPARK_GRAFT_SHUFFLE_PARTITIONS", "256"),
+                "SPARK_GRAFT_SHUFFLE_PARTITIONS": shuffle_partitions,
                 "SPARK_DRIVER_MEMORY": os.environ.get(
-                    "SPARK_DRIVER_MEMORY", "96g"),
+                    "SPARK_DRIVER_MEMORY", driver_memory),
             },
             warm="scale",
         )
-        sf100_block = {
-            "value": round(sum(t for t in sf100_timings.values() if t > 0), 2),
+        scale_blocks[sf_n] = {
+            "value": round(sum(t for t in tier_timings.values() if t > 0), 2),
             "unit": "sec",
-            "queries": sf100_timings,
-            "failed": sorted(n for n, t in sf100_timings.items() if t < 0),
-            "sf": 100,
+            "queries": tier_timings,
+            "failed": sorted(n for n, t in tier_timings.items() if t < 0),
+            "sf": sf_n,
             "timed_runs_per_query": 1,
-            "shuffle_partitions": os.environ.get(
-                "SPARK_GRAFT_SHUFFLE_PARTITIONS", "256"),
+            "shuffle_partitions": shuffle_partitions,
             "isolation": "fresh JVM per query",
             "warm": "page cache primed; min(first run, post-GC repeat)",
-            "note": "binding runs only; documents-tier subset",
         }
+        if note:
+            scale_blocks[sf_n]["note"] = note
 
     # ---- streaming throughput -------------------------------------------
     from assignment_2_dataengineering_spark.session import get_spark
@@ -507,8 +481,8 @@ def main() -> None:
         "stream_state_eps": stream_state_eps,
         "stream_dedup_dps": stream_dedup_dps,
         "streams_sf1": streams_sf1_block,
-        "sf10": sf10_block,
-        "sf100": sf100_block,
+        "sf10": scale_blocks[10],
+        "sf100": scale_blocks[100],
     }
     # Artifact routing (round-9 judge item #7 / ADVICE): every invocation
     # uses the same isolated-JVM protocol, but only a run the BUILDER

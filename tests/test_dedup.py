@@ -374,11 +374,12 @@ def test_span_dedup_cap_routing_is_noop(spark):
 def test_span_dedup_join_and_window_strategies_agree(spark, sf_dir):
     """The sort-free aggregate+shuffle-hash-join first-occurrence (the
     round-8 alternative, which the round-9 "auto" default selects above
-    SPAN_AUTO_JOIN_MIN_BYTES) must be value-identical to the
-    min-over-window form — on the hot-span corpus (where doc 3 empties
-    entirely) AND on the real documents table. Both strategies are
-    pinned explicitly here; "auto" only ever picks between these two,
-    so this equivalence covers every selector outcome."""
+    the "span_first_occurrence" scale-rule threshold) must be
+    value-identical to the min-over-window form — on the hot-span
+    corpus (where doc 3 empties entirely) AND on the real documents
+    table. Both strategies are pinned explicitly here; "auto" only ever
+    picks between these two, so this equivalence covers every selector
+    outcome."""
     from assignment_2_dataengineering_spark.operators.dedup import span_dedup
 
     for docs in (
@@ -409,24 +410,20 @@ def test_span_dedup_rejects_unknown_strategy(spark):
 
 
 def test_span_auto_strategy_policy(spark, sf_dir):
-    """Round-9 scale-aware selection: the pure policy flips at the
-    measured-crossover byte threshold, and the plan-stat probe reads
-    the optimizer estimate without running a job."""
-    from assignment_2_dataengineering_spark.operators.dedup import (
-        SPAN_AUTO_JOIN_MIN_BYTES,
-        _plan_stat_bytes,
-        select_span_strategy,
+    """Round-9 scale-aware selection: the plan-stat probe reads the
+    optimizer estimate of the document scan — positive, and far below
+    the threshold at test scale, so the default resolves to the window
+    plan here (the rule's own boundary is in tests/test_scale_policy.py)."""
+    from assignment_2_dataengineering_spark.operators.scale_policy import (
+        RULES,
+        plan_bytes,
     )
     from assignment_2_dataengineering_spark.sources.tables import load_table
 
-    assert select_span_strategy(SPAN_AUTO_JOIN_MIN_BYTES - 1) == "window"
-    assert select_span_strategy(SPAN_AUTO_JOIN_MIN_BYTES) == "join"
-    # the probe: positive, and far below the threshold at test scale,
-    # so the default resolves to the window plan here
-    est = _plan_stat_bytes(
+    est = plan_bytes(
         load_table(spark, sf_dir, "documents").select("doc_id", "text")
     )
-    assert 0 < est < SPAN_AUTO_JOIN_MIN_BYTES
+    assert 0 < est < RULES["span_first_occurrence"].threshold
 
 
 def test_shingle_index_hashed_and_exact_keys_agree(spark, sf_dir):

@@ -1,4 +1,4 @@
-"""Pin docstring-quoted thresholds to the shipped constants.
+"""Pin docstring-quoted thresholds to the shipped scale-policy table.
 
 Round-9 judge "What's wrong" items #1/#2: q_pagerank's docstring said
 the cadence selector flips at 3e7 edges while the constant was 630_000,
@@ -9,21 +9,20 @@ tests make any future recalibration fail loudly until the user-facing
 docstrings are updated to match.
 """
 
-from assignment_2_dataengineering_spark.operators.dedup import (
-    SPAN_AUTO_JOIN_MIN_BYTES,
-)
-from assignment_2_dataengineering_spark.operators.graph import (
-    PR_CADENCE_AUTO_MIN_EDGES,
-)
+from assignment_2_dataengineering_spark.operators.scale_policy import RULES
 from assignment_2_dataengineering_spark.plans.registry import all_specs
+
+PAGERANK_CADENCE_EDGES = RULES["pagerank_cadence"].threshold
+GRAPH_BUCKET_BYTES = RULES["graph_bucket"].threshold
+SPAN_JOIN_BYTES = RULES["span_first_occurrence"].threshold
 
 
 def test_pagerank_docstring_quotes_the_shipped_cadence_threshold():
     doc = all_specs()["q_pagerank"].fn.__doc__
-    assert PR_CADENCE_AUTO_MIN_EDGES == 630_000
-    assert f"{PR_CADENCE_AUTO_MIN_EDGES:_}" in doc, (
-        "q_pagerank docstring no longer quotes PR_CADENCE_AUTO_MIN_EDGES "
-        f"({PR_CADENCE_AUTO_MIN_EDGES:_}) — recalibrated without updating "
+    assert PAGERANK_CADENCE_EDGES == 630_000
+    assert f"{PAGERANK_CADENCE_EDGES:_}" in doc, (
+        "q_pagerank docstring no longer quotes the pagerank_cadence threshold "
+        f"({PAGERANK_CADENCE_EDGES:_}) — recalibrated without updating "
         "the user-facing threshold"
     )
     # the old wrong figure must be gone
@@ -40,9 +39,9 @@ def test_readme_quotes_the_shipped_cadence_threshold():
     with open(readme) as f:
         text = f.read()
     assert "3e7" not in text, "README env-knob table drifted from the constant"
-    assert f"{PR_CADENCE_AUTO_MIN_EDGES:_}" in text, (
-        "README no longer quotes PR_CADENCE_AUTO_MIN_EDGES "
-        f"({PR_CADENCE_AUTO_MIN_EDGES:_})"
+    assert f"{PAGERANK_CADENCE_EDGES:_}" in text, (
+        "README no longer quotes the pagerank_cadence threshold "
+        f"({PAGERANK_CADENCE_EDGES:_})"
     )
 
 
@@ -68,31 +67,58 @@ def test_graph_bucket_docstring_and_readme_quote_the_threshold():
     selectors' docstrings did."""
     import os
 
-    from assignment_2_dataengineering_spark.plans.queries_graph import (
-        GRAPH_BUCKET_AUTO_MINUTE_MIN_BYTES,
-        _user_edges,
-    )
+    from assignment_2_dataengineering_spark.plans.queries_graph import _user_edges
 
-    assert GRAPH_BUCKET_AUTO_MINUTE_MIN_BYTES == 9_600_000_000
+    assert GRAPH_BUCKET_BYTES == 9_600_000_000
     doc = _user_edges.__doc__
-    assert f"{GRAPH_BUCKET_AUTO_MINUTE_MIN_BYTES:_}" in doc, (
-        "_user_edges docstring no longer quotes "
-        f"GRAPH_BUCKET_AUTO_MINUTE_MIN_BYTES ({GRAPH_BUCKET_AUTO_MINUTE_MIN_BYTES:_})"
+    assert f"{GRAPH_BUCKET_BYTES:_}" in doc, (
+        "_user_edges docstring no longer quotes the graph_bucket threshold "
+        f"({GRAPH_BUCKET_BYTES:_})"
     )
     readme = os.path.join(os.path.dirname(__file__), "..", "README.md")
     with open(readme) as f:
         text = f.read()
-    assert f"{GRAPH_BUCKET_AUTO_MINUTE_MIN_BYTES // 1_000_000_000}" in text and (
-        "GRAPH_BUCKET_AUTO_MINUTE_MIN_BYTES" in text
-    ), "README env-knob table does not reference the bucket selector constant"
+    assert f"{GRAPH_BUCKET_BYTES // 1_000_000_000}" in text and (
+        '"graph_bucket"' in text
+    ), "README env-knob table does not reference the bucket scale rule"
 
 
 def test_span_dedup_docstring_quotes_the_shipped_size_threshold():
     doc = all_specs()["q_span_dedup"].fn.__doc__
-    assert SPAN_AUTO_JOIN_MIN_BYTES == 120_000_000
-    assert f"{SPAN_AUTO_JOIN_MIN_BYTES // 1_000_000} MB" in doc, (
-        "q_span_dedup docstring no longer quotes SPAN_AUTO_JOIN_MIN_BYTES "
-        f"({SPAN_AUTO_JOIN_MIN_BYTES:_} bytes) — recalibrated without "
+    assert SPAN_JOIN_BYTES == 120_000_000
+    assert f"{SPAN_JOIN_BYTES // 1_000_000} MB" in doc, (
+        "q_span_dedup docstring no longer quotes the span_first_occurrence "
+        f"threshold ({SPAN_JOIN_BYTES:_} bytes) — recalibrated without "
         "updating the user-facing threshold"
     )
     assert "1e10" not in doc
+
+
+def test_cited_scripts_and_plan_dumps_exist():
+    """Every `scripts/<name>.py` and `plans/r<N>/...` path the sources,
+    the maintained docs and the repo's skill notes cite must exist in
+    the tree. Deleted round
+    scripts and plan dumps are cited as `git show <sha>:<path>`, which
+    this check skips (the path follows a colon)."""
+    import glob
+    import os
+    import re
+
+    root = os.path.join(os.path.dirname(__file__), "..")
+    files = glob.glob(
+        os.path.join(root, "assignment_2_dataengineering_spark", "**", "*.py"),
+        recursive=True,
+    ) + [
+        os.path.join(root, name)
+        for name in ("README.md", "SCALE.md", "bench.py", "OPTIMIZATION_r11.md")
+    ] + glob.glob(os.path.join(root, ".*", "skills", "*", "SKILL.md"))
+    cite = re.compile(r"(?<![:\w/])(scripts/\w+\.py|plans/r\d+/[\w.{},<>-]*)")
+    missing = []
+    for path in files:
+        with open(path) as f:
+            for lineno, line in enumerate(f, 1):
+                for m in cite.finditer(line):
+                    if not glob.glob(os.path.join(root, m.group(1))):
+                        rel = os.path.relpath(path, root)
+                        missing.append(f"{rel}:{lineno}: {m.group(1)}")
+    assert not missing, "cited paths missing from the tree:\n" + "\n".join(missing)

@@ -336,19 +336,12 @@ def test_pagerank_rejects_bad_cadence(spark):
 
 
 def test_pagerank_cadence_policy_and_env_override(spark, monkeypatch):
-    """Round-9 scale-aware selection: the pure policy flips at the
-    measured edge-count crossover; q_pagerank's env override rejects
-    malformed values loudly (round-8 ADVICE) and accepts 'auto'."""
+    """q_pagerank's env override rejects malformed values loudly
+    (round-8 ADVICE); the cadence rule's own boundary is in
+    tests/test_scale_policy.py."""
     import pytest
 
-    from assignment_2_dataengineering_spark.operators.graph import (
-        PR_CADENCE_AUTO_MIN_EDGES,
-        select_checkpoint_cadence,
-    )
     from assignment_2_dataengineering_spark.plans.registry import get_spec
-
-    assert select_checkpoint_cadence(PR_CADENCE_AUTO_MIN_EDGES - 1) == 1
-    assert select_checkpoint_cadence(PR_CADENCE_AUTO_MIN_EDGES) == 2
 
     q = get_spec("q_pagerank").fn
     monkeypatch.setenv("SPARK_GRAFT_PR_CHECKPOINT_EVERY", "nope")
@@ -359,21 +352,14 @@ def test_pagerank_cadence_policy_and_env_override(spark, monkeypatch):
         q(spark, "/root/testdata/sf0.001")
 
 
-def test_graph_bucket_policy_and_env_override(spark, monkeypatch):
+def test_graph_bucket_policy_and_env_override(spark, sf_dir, monkeypatch):
     """Round-10 scale-aware bucket selection (the last hand-set
-    strategy knob, r9 judge item #8): the pure policy flips hour→minute
-    at the calibrated plan-stat-bytes threshold; with no env var set,
-    _user_edges resolves to "hour" at the test tier (the measured
-    winner at sf10 AND sf100 — SCALE.md §6m); the env var remains an
-    explicit override that beats the selector."""
-    from assignment_2_dataengineering_spark.plans.queries_graph import (
-        GRAPH_BUCKET_AUTO_MINUTE_MIN_BYTES,
-        _user_edges,
-        select_graph_bucket,
-    )
-
-    assert select_graph_bucket(GRAPH_BUCKET_AUTO_MINUTE_MIN_BYTES - 1) == "hour"
-    assert select_graph_bucket(GRAPH_BUCKET_AUTO_MINUTE_MIN_BYTES) == "minute"
+    strategy knob, r9 judge item #8): with no env var set, _user_edges
+    resolves to "hour" at the test tier (the measured winner at sf10
+    AND sf100 — SCALE.md §6m); the env var remains an explicit
+    override that beats the selector, and an explicit argument beats
+    the env var."""
+    from assignment_2_dataengineering_spark.plans.queries_graph import _user_edges
 
     def grain(df) -> str:
         plan = df._jdf.queryExecution().analyzed().toString()
@@ -384,3 +370,17 @@ def test_graph_bucket_policy_and_env_override(spark, monkeypatch):
     assert grain(_user_edges(spark, "/root/testdata/sf0.001")) == "hour"
     monkeypatch.setenv("SPARK_GRAFT_GRAPH_BUCKET", "minute")
     assert grain(_user_edges(spark, "/root/testdata/sf0.001")) == "minute"
+    assert grain(_user_edges(spark, sf_dir, "hour")) == "hour"
+
+
+def test_graph_bucket_env_rejects_unmeasured_grain(spark, sf_dir, monkeypatch):
+    """date_trunc maps an unknown unit to NULL, which would put each
+    event type in one bucket and silently run the 5-partition global
+    sort; the env var accepts only the measured grains and fails loudly
+    on anything else."""
+    from assignment_2_dataengineering_spark.plans.queries_graph import _user_edges
+
+    for bad in ("bogus", "week"):
+        monkeypatch.setenv("SPARK_GRAFT_GRAPH_BUCKET", bad)
+        with pytest.raises(ValueError, match="SPARK_GRAFT_GRAPH_BUCKET"):
+            _user_edges(spark, sf_dir)

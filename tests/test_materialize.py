@@ -1,21 +1,17 @@
 """The round-11 materialization chokepoint: both policy forms must be
 value-neutral (they change where the plan is cut, never what a consumer
-computes), the env dial must fail loudly on junk, and the q_psi_drift
-tier gate must flip exactly at its documented threshold."""
+computes), the env dial must fail loudly on junk, and both q_psi_drift
+gate forms must agree. The thresholds themselves are pinned in
+tests/test_scale_policy.py."""
 
 from __future__ import annotations
 
+import dataclasses
+
 import pytest
 
-from assignment_2_dataengineering_spark.operators.materialize import (
-    MAT_DISK_PERSIST_MIN_BYTES,
-    materialize,
-    select_materialize_mode,
-)
-from assignment_2_dataengineering_spark.plans.queries_analytic import (
-    PSI_MATERIALIZE_MIN_BYTES,
-    select_psi_materialization,
-)
+from assignment_2_dataengineering_spark.operators.materialize import materialize
+from assignment_2_dataengineering_spark.operators.scale_policy import RULES
 
 
 def _base(spark):
@@ -48,20 +44,6 @@ def test_unknown_mode_fails_loudly(spark, monkeypatch):
         materialize(_base(spark))
 
 
-def test_materialize_mode_selector_boundary():
-    # local_checkpoint strictly below the documented threshold,
-    # disk_persist at it
-    assert (
-        select_materialize_mode(MAT_DISK_PERSIST_MIN_BYTES - 1)
-        == "local_checkpoint"
-    )
-    assert select_materialize_mode(MAT_DISK_PERSIST_MIN_BYTES) == "disk_persist"
-    # the measured calibration envelopes fall on the right sides:
-    # every sf0.1 site estimate was <= 1.5e6, every sf10 site >= 2.9e7
-    assert select_materialize_mode(1_500_000) == "local_checkpoint"
-    assert select_materialize_mode(29_000_000) == "disk_persist"
-
-
 def test_per_site_prefer_beats_auto_but_not_env(spark, monkeypatch):
     from pyspark.sql import DataFrame
 
@@ -83,20 +65,14 @@ def test_psi_both_gate_forms_value_identical(spark, sf_dir, monkeypatch):
     """The q_psi_drift tier gate changes the plan only: forcing the
     materialized form at the lazy tier must produce exactly the lazy
     form's rows (the r10 exact-match A/B, pinned as a boundary test)."""
-    from assignment_2_dataengineering_spark.plans import queries_analytic as qa
     from assignment_2_dataengineering_spark.plans.registry import get_spec
 
     spec = get_spec("q_psi_drift")
     lazy = spec.fn(spark, sf_dir).collect()
-    monkeypatch.setattr(qa, "select_psi_materialization", lambda est: True)
+    monkeypatch.setitem(
+        RULES,
+        "psi_materialize",
+        dataclasses.replace(RULES["psi_materialize"], threshold=0),
+    )
     mat = spec.fn(spark, sf_dir).collect()
     assert sorted(map(tuple, lazy)) == sorted(map(tuple, mat))
-
-
-def test_psi_gate_boundary():
-    # lazy strictly below the documented threshold, materialized at it
-    assert select_psi_materialization(PSI_MATERIALIZE_MIN_BYTES - 1) is False
-    assert select_psi_materialization(PSI_MATERIALIZE_MIN_BYTES) is True
-    # the measured calibration points fall on the right sides
-    assert select_psi_materialization(1_125_169) is False  # sf0.1 plan stat
-    assert select_psi_materialization(108_053_139) is True  # sf10 plan stat
