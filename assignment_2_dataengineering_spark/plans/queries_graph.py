@@ -16,7 +16,7 @@ from pyspark.sql import functions as F
 
 from ..operators.graph import pagerank, pagerank_oracle_sql
 from ..operators.materialize import materialize
-from ..operators.scale_policy import choose, override, plan_bytes
+from ..operators.scale_policy import RULES, choose, override, plan_bytes
 from ..sources.tables import load_table
 from .registry import register
 
@@ -62,11 +62,11 @@ def _user_edges(
     events — the measured winner at sf10 AND sf100, calibration next to
     the rule and in SCALE.md §6m) and "minute" above, where per-hour-
     bucket sorts would cross the ~211k-row load at which the
-    coarse-bucket sort degraded measurably. The env var accepts only
-    the measured grains (minute, hour, day): date_trunc maps any other
-    unit to NULL, which would put each event type in one bucket and
-    silently run the 5-partition global sort this function exists to
-    avoid. Granularity changes the plan only — the stitched result is
+    coarse-bucket sort degraded measurably. The argument and the env
+    var accept only the measured grains (minute, hour, day): date_trunc
+    maps any other unit to NULL, which would put each event type in one
+    bucket and silently run the 5-partition global sort this function
+    exists to avoid. Granularity changes the plan only — the stitched result is
     value-identical at any grain (next paragraph) — so the selector can
     never change a query's answer.
 
@@ -78,6 +78,11 @@ def _user_edges(
     substitute the next bucket's first user (spurious edge)."""
     if bucket is None:
         bucket = override("graph_bucket")
+    else:
+        try:
+            RULES["graph_bucket"].parse(bucket)
+        except ValueError:
+            raise ValueError(f"bucket must be one of minute, hour, day; got {bucket!r}") from None
     ev = load_table(spark, sf_dir, "events").select(
         "event_type", "ts", "event_id", "user_id"
     )

@@ -12,9 +12,10 @@ same source plan — each reads the source and keeps its own state
 are swapped for tables, as memory sinks outside complete mode refuse
 to recover from a checkpoint). At the 100 TB/day design point,
 collapse to ONE query whose foreachBatch fans the parsed batch into
-the four writes (the snapshot.merge_snapshot_batch pattern): one
-source read and one dedup state instead of four/two. The per-stage
-operators are identical either way.
+the four writes, each made idempotent by batch id through publish.py's
+high-water-mark / commit_meta protocol: one source read and one dedup
+state instead of four/two. The per-stage operators are identical
+either way.
 
 State width: every query starts with one shuffle (= state) partition
 per core, not the session's batch width. AQE skips micro-batches, so

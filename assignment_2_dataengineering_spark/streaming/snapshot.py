@@ -2,20 +2,21 @@
 
 The reference keeps `latest_by_facility[fid] = {**prev, **validated}`
 under an RLock (dashboard.py:363-370): per-key last-write-wins with
-field-level merge. Spark owns the concurrency; the operator becomes:
+field-level merge. Spark owns the concurrency; the operator has two
+forms with one answer:
 
-- batch/replay form: ranking window (operators.relational.latest_per_key)
-  with per-field backfill via last(ignorenulls) when field-merge matters;
-- streaming form: groupBy(key).agg(max_by/last) in `update` output mode —
-  implemented here over micro-batches with foreachBatch so the same
-  merge logic runs incrementally against a state store table.
+- batch/replay form (`latest_snapshot_batch`): a ts-ordered window per
+  key with per-field backfill via last(ignorenulls);
+- streaming form (`streaming_latest_snapshot`): groupBy(key) with one
+  max_by per field in `update` output mode. The merge buffer lives in
+  Spark's state store, one row per key, checkpointed with the query,
+  so a restarted query resumes the merged snapshot.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 
 def latest_snapshot_batch(events: DataFrame, key: str, ts_col: str = "ts") -> DataFrame:
@@ -27,10 +28,10 @@ def latest_snapshot_batch(events: DataFrame, key: str, ts_col: str = "ts") -> Da
     shuffle on the key. Ties at the SAME (key, ts) order by the
     measure values ascending — a deterministic total order, where a
     bare ts sort left the winner partition-layout-dependent. (The
-    arrival-ordered streaming variants resolve the same tie by arrival
-    instead: batch has no arrival order, so conflicting same-instant
-    readings should be pre-deduped when the two must agree —
-    windows.dedup_events does exactly that in the pipeline.)"""
+    streaming form has no such order: max_by keeps whichever tied
+    row it merges last, so conflicting same-instant readings should
+    be pre-deduped when the two must agree — windows.dedup_events
+    does exactly that in the pipeline.)"""
     measures = [c for c in events.columns if c not in (key, ts_col, "timestamp")]
     order = [F.col(ts_col).asc()] + [F.col(m).asc_nulls_first() for m in measures]
     w = Window.partitionBy(key).orderBy(*order).rowsBetween(
@@ -53,128 +54,20 @@ def latest_snapshot_batch(events: DataFrame, key: str, ts_col: str = "ts") -> Da
 
 
 def streaming_latest_snapshot(events: DataFrame, key: str, ts_col: str = "ts") -> DataFrame:
-    """Streaming form: per-key max_by aggregation in update mode.
-    Attach to `writeStream.outputMode("update")`; Spark's state store
-    holds one row per key (bounded by key cardinality, not stream
-    length — the scalable analog of the reference's dict)."""
+    """Streaming form of `latest_snapshot_batch`: per-key aggregation,
+    attached to `writeStream.outputMode("update")`. Each field is
+    max_by over an ordering that is null where the field is null, and
+    max_by skips null orderings, so a field keeps its newest non-null
+    value: a newer event missing a field does not erase it, and an
+    older event arriving in a later micro-batch fills only fields no
+    newer event carried. Spark's state store holds one row per key
+    (bounded by key cardinality, not stream length — the scalable
+    analog of the reference's dict). Each emission is the key's
+    snapshot so far, so readers take each key's last emission."""
     measures = [c for c in events.columns if c not in (key, ts_col, "timestamp")]
     return events.groupBy(key).agg(
         F.max(ts_col).alias("last_ts"),
-        *[F.max_by(c, ts_col).alias(c) for c in measures],
-    )
-
-
-def merge_snapshot_batch(state: dict[str, DataFrame], key: str):
-    """foreachBatch upsert closure: maintains a snapshot table across
-    micro-batches with {**prev, **new} column-level coalesce — the exact
-    reference merge (dashboard.py:364-365) as an idempotent batch join.
-
-    `state` is a single-slot dict {"df": snapshot} owned by the driver;
-    in production the table would live in Delta/Iceberg and this closure
-    would be a MERGE."""
-
-    def apply(batch: DataFrame, batch_id: int) -> None:
-        inc = latest_snapshot_batch(batch, key)
-        prev = state.get("df")
-        if prev is None:
-            # eager materialization: a micro-batch DataFrame is only valid
-            # within its foreachBatch call — chaining lazy plans across
-            # batches re-evaluates stale sources (and grows lineage
-            # unboundedly). localCheckpoint pins the rows and cuts lineage.
-            state["df"] = inc.localCheckpoint(eager=True)
-            return
-        measures = [c for c in inc.columns if c not in (key, "last_ts")]
-        p = prev.select(
-            key,
-            F.col("last_ts").alias("__p_last_ts"),
-            *[F.col(c).alias(f"__p_{c}") for c in measures],
-        )
-        joined = inc.join(p, key, "full_outer")
-        # event-time merge, not arrival-order: the newer side (by last_ts)
-        # wins each field, backfilling its nulls from the older side —
-        # robust to micro-batches arriving out of replay order (a file
-        # source orders by mtime; a real bus gives no order guarantee).
-        newer_inc = F.col("last_ts").isNotNull() & (
-            F.col("__p_last_ts").isNull() | (F.col("last_ts") >= F.col("__p_last_ts"))
-        )
-        state["df"] = joined.select(
-            key,
-            F.greatest("last_ts", "__p_last_ts").alias("last_ts"),
-            *[
-                F.when(newer_inc, F.coalesce(F.col(c), F.col(f"__p_{c}")))
-                .otherwise(F.coalesce(F.col(f"__p_{c}"), F.col(c)))
-                .alias(c)
-                for c in measures
-            ],
-        ).localCheckpoint(eager=True)
-
-    return apply
-
-
-def stateful_latest_snapshot(
-    events: DataFrame,
-    key: str,
-    measures: list[str],
-    ts_col: str = "ts",
-) -> DataFrame:
-    """T4 as a custom stateful operator: `applyInPandasWithState` holds
-    one (last_ts, *measures) tuple per key in the state store and merges
-    each micro-batch by event time with field-level backfill — the exact
-    `{**prev, **validated}` semantics (dashboard.py:364-365), but
-    distributed: state is partitioned by key across executors, bounded
-    by key cardinality, and checkpointed with the query.
-
-    Prefer `streaming_latest_snapshot` (plain agg, Catalyst-optimized)
-    when field-merge isn't needed; this is the extension point for
-    state logic an aggregate can't express (conditional merges,
-    per-field TTLs, change detection)."""
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    out_schema = T.StructType(
-        [
-            T.StructField(key, T.StringType()),
-            T.StructField("last_ts", T.TimestampType()),
-            *[T.StructField(m, T.DoubleType()) for m in measures],
-        ]
-    )
-    state_schema = T.StructType(
-        [
-            T.StructField("last_ts_us", T.LongType()),
-            *[T.StructField(m, T.DoubleType()) for m in measures],
-        ]
-    )
-
-    def merge(key_tuple, pdfs, state: GroupState):
-        prev = state.get if state.exists else None
-        last_us = prev[0] if prev else None
-        vals = list(prev[1:]) if prev else [None] * len(measures)
-        for pdf in pdfs:
-            if not len(pdf):
-                continue
-            pdf = pdf.sort_values(ts_col)
-            for _, row in pdf.iterrows():
-                us = int(row[ts_col].value // 1_000)  # ns → µs
-                newer = last_us is None or us >= last_us
-                for i, m in enumerate(measures):
-                    v = row[m]
-                    if pd.isna(v):
-                        continue  # field-merge: missing field keeps old value
-                    if newer or vals[i] is None:
-                        vals[i] = float(v)
-                if newer:
-                    last_us = us
-        state.update((last_us, *vals))
-        yield pd.DataFrame(
-            {
-                key: [key_tuple[0]],
-                "last_ts": [pd.Timestamp(last_us, unit="us")],
-                **{m: [vals[i]] for i, m in enumerate(measures)},
-            }
-        )
-
-    return events.groupBy(key).applyInPandasWithState(
-        merge, out_schema, state_schema, "update", GroupStateTimeout.NoTimeout
+        *[F.max_by(c, F.when(F.col(c).isNotNull(), F.col(ts_col))).alias(c) for c in measures],
     )
 
 
@@ -203,8 +96,7 @@ def enrichment_upsert_batch(
                 dim.select(key), key, "left_anti"
             ).localCheckpoint()
             # checkpoint the UNION too: without it batch k's anti-join
-            # re-evaluates a k-deep union chain (unbounded plan growth
-            # — the hazard merge_snapshot_batch documents and avoids)
+            # re-evaluates a k-deep union chain (unbounded plan growth)
             dim_state["df"] = dim.unionByName(new_rows).localCheckpoint()
             if write_back is not None:
                 write_back(new_rows)

@@ -1,43 +1,25 @@
-"""Arbitrary stateful streaming: running bounded top-k per key — the
-streaming twin of the batch bounded-retention top-k
-(operators/relational.py topk_retention, reference
-dashboard.py:330-340's "keep the latest 5000" buffer). State per key
-is EXACTLY k values + one counter, so state size is bounded by
-k × |keys| regardless of stream length — the property that makes it
-safe on an unbounded 100 TB/day stream.
+"""Arbitrary stateful streaming with applyInPandasWithState, for state
+logic an aggregate cannot express.
 
-Two implementations of the same semantics:
+- `running_topk`: running bounded top-k per key — the streaming twin
+  of the batch bounded-retention top-k (operators/relational.py
+  topk_retention, reference dashboard.py:330-340's "keep the latest
+  5000" buffer). State per key is EXACTLY k values + one counter, so
+  state size is bounded by k × |keys| regardless of stream length —
+  the property that makes it safe on an unbounded 100 TB/day stream.
+- `decayed_counter`: per-key exponential-decay score with exact
+  batch-stream parity.
 
-- `running_topk` — applyInPandasWithState (one state tuple per key);
-  runs everywhere Spark 4 runs; e2e-tested against the batch oracle
-  in tests/test_stateful.py.
-- `running_topk_tws` — transformWithStateInPandas, Spark 4's successor
-  API with named/typed state variables and independent lifecycles.
-  Its state protocol needs the `protobuf` package, absent from this
-  container, so the implementation is a gated seam (import-checked,
-  skip-tested) kept as the forward-looking form.
+Both are e2e-tested against their batch oracles in
+tests/test_stateful.py.
 """
 
 from __future__ import annotations
-
-from typing import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-
-try:  # transformWithState needs google.protobuf at runtime
-    import google.protobuf  # noqa: F401
-
-    HAS_PROTOBUF = True
-except ImportError:
-    HAS_PROTOBUF = False
-
-from pyspark.sql.streaming.stateful_processor import (
-    StatefulProcessor,
-    StatefulProcessorHandle,
-)
 
 _OUT_SCHEMA = T.StructType(
     [
@@ -94,73 +76,6 @@ def running_topk(
         .groupBy("key")
         .applyInPandasWithState(
             merge, _OUT_SCHEMA, state_schema, "update", GroupStateTimeout.NoTimeout
-        )
-    )
-
-
-class RunningTopK(StatefulProcessor):
-    """Per-key running top-k of a numeric column.
-
-    State: one ValueState holding (sorted-desc top-k list, total seen).
-    Each micro-batch merges the batch's values into the retained list
-    and re-emits the key's current top-k — update semantics, so the
-    latest emission per key is the answer so far. Merging is
-    associative: processing order across batches cannot change the
-    result (pinned against the batch oracle in tests/test_stateful.py).
-    """
-
-    def __init__(self, k: int = 5, value_col: str = "value") -> None:
-        self.k = k
-        self.value_col = value_col
-
-    def init(self, handle: StatefulProcessorHandle) -> None:
-        self._state = handle.getValueState(
-            "topk", "vals array<double>, n_seen bigint"
-        )
-
-    def handleInputRows(
-        self, key, rows: Iterator[pd.DataFrame], timerValues
-    ) -> Iterator[pd.DataFrame]:
-        existing = self._state.get()
-        vals, n_seen = (
-            (list(existing[0]), int(existing[1])) if existing else ([], 0)
-        )
-        for pdf in rows:
-            # NaN/null dropped — see running_topk
-            xs = pdf[self.value_col].astype(float).dropna().tolist()
-            n_seen += len(xs)
-            # merge + trim: state never exceeds k floats per key
-            vals = sorted(vals + xs, reverse=True)[: self.k]
-        self._state.update((vals, n_seen))
-        yield pd.DataFrame(
-            {"key": [key[0]], "n_seen": [n_seen], "topk": [vals]}
-        )
-
-    def close(self) -> None:
-        pass
-
-
-def running_topk_tws(
-    events: DataFrame,
-    key: str = "user_id",
-    value_col: str = "value",
-    k: int = 5,
-) -> DataFrame:
-    """transformWithStateInPandas form of running_topk (same semantics,
-    same output schema). Requires the RocksDB state store provider AND
-    the protobuf package (the TWS state protocol) — raises ImportError
-    with a clear message when protobuf is absent so callers can fall
-    back to running_topk."""
-    if not HAS_PROTOBUF:
-        raise ImportError(
-            "transformWithStateInPandas needs the 'protobuf' package; "
-            "use running_topk (applyInPandasWithState) instead"
-        )
-    return (
-        events.select(F.col(key).alias("key"), F.col(value_col).alias(value_col))
-        .groupBy("key")
-        .transformWithStateInPandas(
-            RunningTopK(k, value_col), _OUT_SCHEMA, "update", "none"
         )
     )
 

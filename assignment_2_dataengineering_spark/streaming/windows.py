@@ -16,35 +16,16 @@ from pyspark.sql import functions as F
 
 
 def dedup_events(events: DataFrame, keys: list[str], watermark: str | None = "60 minutes", ts_col: str = "ts") -> DataFrame:
-    """T7 duplicate suppression on (key, event-time). With a watermark
-    the state store evicts old keys; QoS-1 at-least-once delivery (T8)
-    composes with this into effective exactly-once."""
+    """T7 duplicate suppression on (key, event-time). On a watermarked
+    stream the watermark column is part of the dedup key, so the state
+    store evicts a (key, ts) pair once the watermark passes its ts:
+    state holds the watermark delay's worth of pairs, not every pair
+    ever seen. QoS-1 at-least-once delivery (T8) composes with this into
+    effective exactly-once; a redelivery later than the watermark is
+    dropped as late, not re-emitted. Batch frames dedup exactly."""
     if watermark and events.isStreaming:
         events = events.withWatermark(ts_col, watermark)
     return events.dropDuplicates(keys + [ts_col])
-
-
-def dedup_events_bounded(
-    events: DataFrame,
-    keys: list[str],
-    watermark: str = "60 minutes",
-    ts_col: str = "ts",
-) -> DataFrame:
-    """T7/T8 duplicate suppression with PROVABLY bounded state:
-    dropDuplicatesWithinWatermark keeps a key in the state store only
-    until the watermark passes its first-seen event time, then evicts —
-    whereas plain dropDuplicates holds every distinct (key, ts) forever
-    unless the watermark column is part of the key set. For an infinite
-    stream at 100 TB/day this is the difference between O(delay-window)
-    and O(stream-lifetime) state. Duplicates are suppressed when they
-    arrive within the watermark delay of the original — exactly the
-    QoS-1 redelivery window (streaming/replay.py T8). Batch frames fall
-    back to exact dropDuplicates (no state to bound)."""
-    if not events.isStreaming:
-        return events.dropDuplicates(keys + [ts_col])
-    return events.withWatermark(ts_col, watermark).dropDuplicatesWithinWatermark(
-        keys + [ts_col]
-    )
 
 
 def sliding_window_sums(

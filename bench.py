@@ -43,7 +43,9 @@ data, different measurement protocol. The JSON carries
 
 Streaming: three throughput numbers over ~100k fixture events each,
 covering the three maintenance shapes — watermarked window aggregation
-(stream_eps), applyInPandasWithState latest-snapshot (stream_state_eps),
+(stream_eps), the field-merging latest-snapshot aggregation
+(stream_state_eps; before the streaming_latest_snapshot switch it timed
+an applyInPandasWithState snapshot, so earlier ledgers do not compare),
 and the persisted LSH dedup-index foreachBatch path (stream_dedup_dps,
 in docs/s over the sf documents table). Each is guarded: a streaming
 failure must not take down the batch bench line. Stream methodology is
@@ -217,6 +219,18 @@ def _run_isolated(
     return timings
 
 
+def _artifact_name(sf: float) -> str:
+    """The local JSON a run writes. Only a binding run
+    (SPARK_GRAFT_BINDING=1: supervised, idle machine) at the ledger's
+    scale, sf0.1, writes BENCH_LOCAL_latest.json, so "latest" always
+    compares with the BENCH_LOCAL_r{N} ledger: a loaded or other-scale
+    run there reads as a phantom regression. Any other run writes
+    BENCH_LOCAL_driver_run.json."""
+    if os.environ.get("SPARK_GRAFT_BINDING") == "1" and sf == 0.1:
+        return "BENCH_LOCAL_latest.json"
+    return "BENCH_LOCAL_driver_run.json"
+
+
 def main() -> None:
     if len(sys.argv) > 1 and sys.argv[1] == "--child":
         _child(sys.argv[2], sys.argv[3], int(sys.argv[4]),
@@ -363,15 +377,16 @@ def main() -> None:
         ), n
 
     def _stateful_bench(spark):
-        # applyInPandasWithState latest-per-key snapshot with
-        # field-level backfill — the custom stateful operator path
+        # latest-per-key snapshot with field-level backfill — the
+        # dashboard plane's stateful snapshot operator
         from assignment_2_dataengineering_spark.streaming import ingest, snapshot
 
         stream, n = _event_source(spark)
-        snap = snapshot.stateful_latest_snapshot(
-            ingest.facility_branch(ingest.parse_events(stream)),
+        snap = snapshot.streaming_latest_snapshot(
+            ingest.facility_branch(ingest.parse_events(stream)).select(
+                "facility_id", "ts", "power_mw", "co2_tonnes"
+            ),
             "facility_id",
-            ["power_mw", "co2_tonnes"],
         )
         return (
             snap.writeStream.outputMode("update")
@@ -466,7 +481,7 @@ def main() -> None:
         # a 2,000-char stdout tail and BENCH_r07's first five sf0.1
         # timings fell off the end (round-7 judge item #5). The compact
         # line fits the window; the FULL artifact is also written to a
-        # local JSON (see the SPARK_GRAFT_BINDING routing below) and the
+        # local JSON (see _artifact_name) and the
         # binding run is committed per round as BENCH_LOCAL_r{N}.json.
         "queries": {n: round(t, 2) for n, t in timings.items()},
         "failed": sorted(n for n, t in timings.items() if t < 0),
@@ -484,23 +499,7 @@ def main() -> None:
         "sf10": scale_blocks[10],
         "sf100": scale_blocks[100],
     }
-    # Artifact routing (round-9 judge item #7 / ADVICE): every invocation
-    # uses the same isolated-JVM protocol, but only a run the BUILDER
-    # supervises (idle machine, sf10 + streams tiers enabled) is the
-    # round's binding measurement — the round-8/9 driver runs were
-    # ambient-load-contaminated ~1.5x uniformly and overwrote "latest",
-    # so readers diffing "latest" against the BENCH_LOCAL_r{N} ledger saw
-    # a phantom regression. SPARK_GRAFT_BINDING=1 (set by the builder's
-    # measurement procedure) writes BENCH_LOCAL_latest.json; any other
-    # run (the per-round driver invocation, ad-hoc smoke runs) writes
-    # BENCH_LOCAL_driver_run.json so "latest" always means the binding
-    # artifact.
-    artifact = (
-        "BENCH_LOCAL_latest.json"
-        if os.environ.get("SPARK_GRAFT_BINDING") == "1"
-        else "BENCH_LOCAL_driver_run.json"
-    )
-    with open(os.path.join(REPO, artifact), "w") as fh:
+    with open(os.path.join(REPO, _artifact_name(sf)), "w") as fh:
         json.dump(payload, fh, indent=1)
     print(json.dumps(payload))
     spark.stop()

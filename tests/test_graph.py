@@ -384,3 +384,15 @@ def test_graph_bucket_env_rejects_unmeasured_grain(spark, sf_dir, monkeypatch):
         monkeypatch.setenv("SPARK_GRAFT_GRAPH_BUCKET", bad)
         with pytest.raises(ValueError, match="SPARK_GRAFT_GRAPH_BUCKET"):
             _user_edges(spark, sf_dir)
+
+
+def test_graph_bucket_argument_rejects_unmeasured_grain(spark, sf_dir, monkeypatch):
+    """An explicit `bucket=` goes to date_trunc as well, so it takes the
+    env var's check: a typo raises naming the argument instead of
+    silently running the 5-partition global sort."""
+    from assignment_2_dataengineering_spark.plans.queries_graph import _user_edges
+
+    monkeypatch.delenv("SPARK_GRAFT_GRAPH_BUCKET", raising=False)
+    for bad in ("bogus", "week", ""):
+        with pytest.raises(ValueError, match=f"bucket .*got {bad!r}"):
+            _user_edges(spark, sf_dir, bad)

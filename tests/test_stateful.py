@@ -1,8 +1,8 @@
 """E2E for the custom stateful tier (streaming/stateful.py): running
 bounded top-k over a two-batch file stream must equal the batch top-k
 over the union — associativity of the merge, and state bounded at k
-values per key. The transformWithStateInPandas twin is a gated seam
-(protobuf absent in this container) — pinned to raise cleanly.
+values per key — and the decayed counter must equal its one-shot batch
+aggregate whatever the arrival order.
 """
 
 from __future__ import annotations
@@ -81,17 +81,6 @@ def test_running_topk_matches_batch_oracle(spark, two_batch_dir):
         assert topk == expect[u], (u, topk, expect[u])
         assert len(topk) == K  # state bounded at k
         assert n_seen == 12  # both batches counted exactly once
-
-
-def test_tws_variant_gated_without_protobuf(spark, two_batch_dir):
-    if stateful.HAS_PROTOBUF:
-        pytest.skip("protobuf present; gate not exercised")
-    stream = (
-        spark.readStream.schema("user_id long, value double")
-        .parquet(str(two_batch_dir / "src"))
-    )
-    with pytest.raises(ImportError, match="protobuf"):
-        stateful.running_topk_tws(stream, key="user_id", value_col="value", k=K)
 
 
 def test_decayed_counter_matches_batch_and_ignores_arrival_order(

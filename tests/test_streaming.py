@@ -109,27 +109,35 @@ def test_dedup_suppresses_duplicate_events(parsed_batch):
 
 
 def test_streaming_e2e_file_replay(spark, tmp_path_factory, event_lines):
-    """availableNow file-source replay → snapshot (foreachBatch merge) +
-    windowed sums (memory sink) — asserts end-state equals the batch
-    goldens computed from the same lines."""
+    """availableNow file-source replay, many micro-batches → latest
+    snapshot (streaming_latest_snapshot, update-mode memory sink) +
+    windowed sums (complete-mode memory sink) — asserts end-state equals
+    the batch goldens computed from the same lines."""
     src = str(tmp_path_factory.mktemp("replay"))
     n_files = replay.write_replay_chunks(event_lines, src, events_per_file=150)
     assert n_files > 1
 
     stream = replay.file_replay_stream(spark, src)
-    parsed = ingest.parse_events(stream)
-    fac = ingest.facility_branch(parsed)
-
-    state: dict = {}
+    fac = ingest.facility_branch(ingest.parse_events(stream)).select(
+        "facility_id", "ts", "power_mw", "co2_tonnes"
+    )
     q = (
-        fac.writeStream.outputMode("append")
-        .foreachBatch(snapshot.merge_snapshot_batch(state, "facility_id"))
+        snapshot.streaming_latest_snapshot(fac, "facility_id")
+        .writeStream.outputMode("update")
+        .format("memory")
+        .queryName("snap_sink")
         .trigger(availableNow=True)
         .option("checkpointLocation", str(tmp_path_factory.mktemp("ckpt1")))
         .start()
     )
     q.awaitTermination(120)
-    snap = state["df"]
+    assert q.lastProgress["batchId"] >= 1  # the merge ran across micro-batches
+    # update-mode memory sink appends every emission; latest row per key wins
+    snap = spark.sql(
+        """select facility_id, power_mw, co2_tonnes from (
+             select *, row_number() over (partition by facility_id order by last_ts desc) rn
+             from snap_sink) where rn = 1"""
+    )
 
     # golden: batch latest-per-key over the same lines
     raw = spark.createDataFrame([(l,) for l in event_lines], "value string")
@@ -161,39 +169,75 @@ def test_streaming_e2e_file_replay(spark, tmp_path_factory, event_lines):
     assert got.join(want, ["bucket", "facility_id", "sum_power_mw"], "inner").count() == want.count()
 
 
-def test_stateful_snapshot_applyinpandas(spark, tmp_path_factory, event_lines):
-    """applyInPandasWithState latest-per-key: end state must equal the
-    batch golden (same semantics as the foreachBatch merge, but state
-    lives in Spark's checkpointed store instead of a driver table)."""
-    src = str(tmp_path_factory.mktemp("replay_st"))
-    replay.write_replay_chunks(event_lines, src, events_per_file=150)
-    stream = replay.file_replay_stream(spark, src)
-    fac = ingest.facility_branch(ingest.parse_events(stream)).select(
-        "facility_id", "ts", "power_mw", "co2_tonnes"
-    )
-    snap = snapshot.stateful_latest_snapshot(fac, "facility_id", ["power_mw", "co2_tonnes"])
-    q = (
-        snap.writeStream.outputMode("update")
-        .format("memory")
-        .queryName("state_sink")
-        .trigger(availableNow=True)
-        .option("checkpointLocation", str(tmp_path_factory.mktemp("ckpt_st")))
-        .start()
-    )
-    q.awaitTermination(120)
-    # update-mode memory sink appends every emission; latest row per key wins
-    got = spark.sql(
-        """select facility_id, power_mw, co2_tonnes from (
-             select *, row_number() over (partition by facility_id order by last_ts desc) rn
-             from state_sink) where rn = 1"""
-    )
-    raw = spark.createDataFrame([(l,) for l in event_lines], "value string")
-    golden = snapshot.latest_snapshot_batch(
-        ingest.facility_branch(ingest.parse_events(raw)), "facility_id"
-    )
-    g = {r.facility_id: (r.power_mw, r.co2_tonnes) for r in golden.collect()}
-    s = {r.facility_id: (r.power_mw, r.co2_tonnes) for r in got.collect()}
-    assert s == g
+def test_streaming_latest_snapshot_field_merge_survives_restart(spark, tmp_path_factory):
+    """streaming_latest_snapshot is the reference's `{**prev, **new}`
+    field merge, and its state survives a restart: each field keeps its
+    newest non-null value, a newer event missing a field does not erase
+    it, and an older event landing after the restart fills only the
+    fields no newer event carried. The query stops after two
+    micro-batches and resumes from the same checkpoint; its update log,
+    resolved to each key's last emission, equals latest_snapshot_batch
+    over every event. Memory sinks refuse to recover from a checkpoint
+    outside complete mode, so micro-batches append to a parquet table
+    tagged with their batch id."""
+    import os
+
+    from pyspark.testing import assertDataFrameEqual
+
+    from assignment_2_dataengineering_spark.operators.relational import latest_per_key
+
+    schema = "facility_id string, ts timestamp, power_mw double, co2_tonnes double"
+    t0, t1, t2, t3 = (f"2024-01-01T00:{m:02d}:00Z" for m in (0, 5, 10, 15))
+    files = [
+        [("A", t1, 1.0, 10.0), ("B", t1, None, 3.0), ("C", t1, 1.0, 1.0)],
+        [("A", t2, 2.0, None)],  # newer, missing co2: A keeps 10.0
+        # after the restart
+        [("A", t0, 0.0, 5.0), ("B", t0, 7.0, 4.0)],  # older: fills only B's power
+        [("C", t3, None, None), ("D", t2, None, 9.0)],  # newer, all null: C keeps both
+    ]
+    src = str(tmp_path_factory.mktemp("snap_restart_src"))
+    ckpt = str(tmp_path_factory.mktemp("snap_restart_ckpt"))
+    out = os.path.join(str(tmp_path_factory.mktemp("snap_restart_out")), "snap")
+
+    def land(i):
+        rows = [dict(zip(("facility_id", "ts", "power_mw", "co2_tonnes"), r)) for r in files[i]]
+        with open(os.path.join(src, f"{i:03d}.json"), "w") as f:
+            f.write("\n".join(json.dumps(r) for r in rows) + "\n")
+
+    def run():
+        events = spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).json(src)
+        q = (
+            snapshot.streaming_latest_snapshot(events, "facility_id")
+            .writeStream.outputMode("update")
+            .foreachBatch(
+                lambda batch, batch_id: batch.withColumn("batch_id", F.lit(batch_id))
+                .write.mode("append")
+                .parquet(out)
+            )
+            .option("checkpointLocation", ckpt)
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination(120)
+        return q.lastProgress["batchId"]
+
+    land(0)
+    land(1)
+    assert run() == 1
+    land(2)
+    land(3)
+    assert run() == 3  # resumed after batch 1, so state came from the checkpoint
+
+    cols = ["facility_id", "last_ts", "power_mw", "co2_tonnes"]
+    got = latest_per_key(spark.read.parquet(out), ["facility_id"], "batch_id").select(cols)
+    every = spark.read.schema(schema).json(src)
+    assertDataFrameEqual(got, snapshot.latest_snapshot_batch(every, "facility_id").select(cols))
+    assert {r.facility_id: (r.power_mw, r.co2_tonnes) for r in got.collect()} == {
+        "A": (2.0, 10.0),
+        "B": (7.0, 3.0),
+        "C": (1.0, 1.0),
+        "D": (None, 9.0),
+    }
 
 
 def test_dashboard_pipeline_end_to_end(spark, tmp_path_factory, event_lines):
@@ -600,14 +644,15 @@ def test_sliding_window_streaming_matches_batch(spark, tmp_path_factory, event_l
 
 
 def test_dedup_bounded_suppresses_within_watermark(spark, tmp_path_factory, event_lines):
-    """dropDuplicatesWithinWatermark path: the fixture's QoS-1 duplicate
-    arrives within the watermark delay and is suppressed; state stays
-    bounded by eviction (batch fallback stays exact dropDuplicates)."""
+    """dedup_events on a watermarked stream: the fixture's QoS-1
+    duplicate arrives within the watermark delay and is suppressed;
+    ts is part of the dedup key, so state stays bounded by watermark
+    eviction (a batch frame dedups exactly)."""
     src = str(tmp_path_factory.mktemp("ddw_replay"))
     replay.write_replay_chunks(event_lines, src, events_per_file=150)
     stream = replay.file_replay_stream(spark, src)
     fac = ingest.facility_branch(ingest.parse_events(stream))
-    deduped = windows.dedup_events_bounded(fac, ["facility_id"], watermark="60 minutes")
+    deduped = windows.dedup_events(fac, ["facility_id"], watermark="60 minutes")
     q = (
         deduped.writeStream.outputMode("append")
         .format("memory")
@@ -620,11 +665,11 @@ def test_dedup_bounded_suppresses_within_watermark(spark, tmp_path_factory, even
     got = spark.sql("select facility_id, ts from ddw_sink")
     # no (facility_id, ts) appears twice post-dedup
     assert got.groupBy("facility_id", "ts").count().filter(F.col("count") > 1).count() == 0
-    # and the batch fallback agrees on the surviving multiset
+    # the watermark evicted pairs: the store holds fewer than were emitted
+    assert q.lastProgress["stateOperators"][0]["numRowsTotal"] < got.count()
+    # and the batch form agrees on the surviving multiset
     raw = spark.createDataFrame([(l,) for l in event_lines], "value string")
-    batch = windows.dedup_events_bounded(
-        ingest.facility_branch(ingest.parse_events(raw)), ["facility_id"]
-    )
+    batch = windows.dedup_events(ingest.facility_branch(ingest.parse_events(raw)), ["facility_id"])
     assert got.count() == batch.count()
 
 
